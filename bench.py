@@ -65,7 +65,6 @@ HEADLINE = [
     "x_unigram_logprob",
     "x_sample_mixture",
     "x_repetition_metrics",
-    "x_repetition_metrics_prod",
     "x_multimodal_resize",
     "x_skew_salted_agg",
     "x_window_rollup",
@@ -239,20 +238,6 @@ def main() -> None:
             ci_docs.filter(F.col("doc_id") % 3 == 2).select("doc_id"),
             spark.read.parquet(f"{ci_tmp}/pairs"),
         )
-    )
-
-    # PRODUCTION twin of x_winnow_fingerprints (r12 optimization round):
-    # same (id, n_chars, n_kgrams, n_fps, fps) output, BIT-IDENTICAL
-    # (pinned by test_winnow_fingerprints_arrow_twin_bit_exact), but the
-    # normalize -> k-gram hash -> rightmost-min chain runs as one
-    # Arrow-batched numpy pass instead of the interpreted JVM
-    # higher-order-function chain the oracle-portable lane keeps.
-    from snowflake_data_pipeline_demo_spark.operators.text import (
-        winnow_fingerprints_arrow,
-    )
-
-    extras["x_winnow_fingerprints_prod"] = lambda: winnow_fingerprints_arrow(
-        load(spark, SF_DIR, "documents"), k=4, w=3
     )
 
     def _host_steal_sec() -> float | None:

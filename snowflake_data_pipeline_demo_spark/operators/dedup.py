@@ -94,8 +94,8 @@ def exploded_shingles(df: DataFrame, text_col: str = "text",
     sf0.1 is a wash (1.59 vs 1.71 s), but at 200k docs on a calm host
     the array form takes 15.2 s vs the stitch's 2.1-5.1 s — the
     interpreted higher-order-function cost per token dwarfs the
-    exchange it saves, exactly the crossover the r04 repetition-twin
-    measurement already recorded (text.py:repetition_metrics_agg).
+    exchange it saves, the same trade that made the aggregation form
+    of text.py:repetition_metrics the single implementation.
     The token-row exchange is the cheaper side of the trade on every
     scale this host can measure; a network-bound cluster may flip it,
     and the array form lives on in the pinning test should that ever
@@ -598,12 +598,6 @@ def simhash_signatures(df: DataFrame, text_col: str = "text",
         for j in range(16)
     ]
     return agg.select(F.col(id_col), F.concat(*bits).alias("simhash"))
-
-
-def simhash_hamming(a: Column, b: Column) -> Column:
-    """Hamming distance between two bitstring signatures."""
-    pairs = F.zip_with(F.split(a, ""), F.split(b, ""), lambda x, y: (x != y).cast("int"))
-    return F.aggregate(pairs, F.lit(0), lambda acc, v: acc + v)
 
 
 # ---------------------------------------------------------------------------

@@ -132,17 +132,6 @@ def _program_dim(nation: DataFrame) -> DataFrame:
     )
 
 
-def distinct_days(lineitem: DataFrame) -> list[str]:
-    """dp_setup.sql:45-51 — enumerate distinct day partitions (drives the
-    stream_data unload loop). The y||'-'||0||m||'-'||d build collapses to
-    ``date_format`` (SURVEY F3)."""
-    rows = (
-        lineitem.select(F.date_format("l_shipdate", "yyyy-MM-dd").alias("day"))
-        .distinct().orderBy("day").collect()
-    )
-    return [r["day"] for r in rows]
-
-
 def extract_trips(raw: DataFrame, v_col: str = "v") -> DataFrame:
     """push_trips extraction (dp_setup.sql:192-203): parse the document
     once, path-cast all 17 fields to typed columns. The epoch-micros

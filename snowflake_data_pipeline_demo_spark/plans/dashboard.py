@@ -21,12 +21,6 @@ relations (the reference also plans each scalar subquery separately).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-
-def _scalar(df: DataFrame, col: F.Column) -> object:
-    row = df.agg(col.alias("v")).collect()
-    return row[0]["v"] if row else None
 
 
 def pipeline_status(

@@ -1441,53 +1441,10 @@ def x_sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-doc duplicate n-gram fractions (n=1,2,3) — the Gopher
-    repetition rules (operators/text.repetition_metrics)."""
+    repetition rules (operators/text.repetition_metrics: posexplode +
+    window-lead + one groupBy)."""
     d = testdata.load(spark, sf_dir, "documents")
-    return d.select("doc_id", text.repetition_metrics("text").alias("r")) \
-        .select("doc_id", "r.dup_unigram_frac", "r.dup_bigram_frac",
-                "r.dup_trigram_frac")
-
-
-@query(
-    "x_repetition_metrics_prod",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, {_DTOKS} AS t FROM documents),
-    g AS (
-      SELECT doc_id, t,
-             CASE WHEN len(t) >= 2
-                  THEN [concat_ws(' ', t[CAST(i AS INT)], t[CAST(i AS INT)+1])
-                        for i in range(1, len(t))]
-                  ELSE [] END AS g2,
-             CASE WHEN len(t) >= 3
-                  THEN [concat_ws(' ', t[CAST(i AS INT)], t[CAST(i AS INT)+1],
-                                  t[CAST(i AS INT)+2])
-                        for i in range(1, len(t)-1)]
-                  ELSE [] END AS g3
-      FROM t
-    )
-    SELECT doc_id,
-           CASE WHEN len(t) > 0
-                THEN round(1.0 - len(list_distinct(t)) / len(t), 4)
-                ELSE 0.0 END AS dup_unigram_frac,
-           CASE WHEN len(g2) > 0
-                THEN round(1.0 - len(list_distinct(g2)) / len(g2), 4)
-                ELSE 0.0 END AS dup_bigram_frac,
-           CASE WHEN len(g3) > 0
-                THEN round(1.0 - len(list_distinct(g3)) / len(g3), 4)
-                ELSE 0.0 END AS dup_trigram_frac
-    FROM g
-    """,
-    survey_ref="north-star:repetition-metrics",
-)
-def x_repetition_metrics_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aggregation twin of x_repetition_metrics: same output + oracle,
-    built shuffle-side (posexplode + window-lead + one groupBy) instead
-    of interpreted per-row n-gram arrays. Measured at sf0.1 the per-row
-    array form wins (zero shuffle); both shapes are benched
-    round-over-round (operators/text.repetition_metrics_agg docstring
-    has the trade-off analysis)."""
-    d = testdata.load(spark, sf_dir, "documents")
-    return text.repetition_metrics_agg(d, "text", "doc_id")
+    return text.repetition_metrics(d, "text", "doc_id")
 
 
 @query(
@@ -3212,10 +3169,12 @@ def x_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per batch frame (r13: each per-batch count re-paid the loader's
     # repartition exchange — 3 corpus passes for 3 integers; guide
     # §1.2). b1 re-ingests b0's docs under fresh ids, so its n_in is
-    # |mod 1| + |mod 0| — same values, one pass.
+    # |mod 1| + |mod 0| — same values, one pass. A NULL doc_id lands
+    # in no batch (NULL % 3 matches no filter), so it is not counted.
     mod_counts = {
         int(r["m"]): r["n"]
-        for r in d.groupBy((F.col("doc_id") % 3).alias("m"))
+        for r in d.filter(F.col("doc_id").isNotNull())
+        .groupBy((F.col("doc_id") % 3).alias("m"))
         .agg(F.count("*").alias("n")).collect()
     }
     n_ins = (mod_counts.get(0, 0),
@@ -3535,11 +3494,11 @@ def x_embed_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="north-star:winnowing-fingerprints",
 )
 def x_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing document fingerprints (operators/text.py:winnow_codes
-    — Schleimer/Wilkerson/Aiken SIGMOD'03, the MOSS algorithm): k-gram
-    polynomial hashes, rightmost-min of each w-window, encoded as
-    pos*MOD+hash so both engines dedupe/sort the selections
-    identically. A pure shuffle-free projection (plan-pinned); the
+    """Winnowing document fingerprints (operators/text.py:
+    winnow_fingerprints — Schleimer/Wilkerson/Aiken SIGMOD'03, the MOSS
+    algorithm): k-gram polynomial hashes, rightmost-min of each
+    w-window, encoded as pos*MOD+hash so both engines dedupe/sort the
+    selections identically. A shuffle-free projection (plan-pinned); the
     guarantee (any shared substring >= w+k-1 chars shares a
     fingerprint, density 2/(w+1)) is what makes doc-overlap detection
     at 100 TB a bounded posting-list equi-join instead of a text

@@ -18,12 +18,30 @@ from __future__ import annotations
 import logging
 import os
 
-from pyspark.sql import Column, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 logger = logging.getLogger(__name__)
 
 CURRENT_ACCOUNT_CONF = "engine.current_account"
+
+# Locale pin (en-US): Spark's non-ASCII lower()/upper()/initcap() go
+# through java.lang.String casing under the JVM DEFAULT locale, so e.g.
+# a tr_TR JVM lowercases 'I' to dotless-i. Winnowing lowercases in
+# Python (str.lower() is locale-independent); the pin keeps the JVM
+# casing operators that remain (normalize, tokens, content_fingerprint, ...)
+# environment-independent on the driver and on every executor.
+_LOCALE_OPTS = "-Duser.language=en -Duser.country=US"
+
+
+def _jvm_opts() -> str:
+    """Driver JVM options: ``$SPARK_GRAFT_JVM_OPTS`` (default G1) with
+    the locale pin appended unless the override sets its own
+    ``-Duser.language``."""
+    opts = os.environ.get("SPARK_GRAFT_JVM_OPTS", "-XX:+UseG1GC")
+    if "-Duser.language" not in opts:
+        opts = f"{opts} {_LOCALE_OPTS}"
+    return opts
+
 
 _DEFAULTS = {
     # Local mode: one JVM; size shuffle partitions to cores, not 200.
@@ -37,18 +55,10 @@ _DEFAULTS = {
     # GC for the single local-mode JVM (driver + executors share one
     # heap). G1 measured 30.1s vs ParallelGC 31.8s on the headline bench
     # at 24g; ParallelGC at 64g degenerates (full-GC stalls, 298s total).
-    # Keep the JVM-default G1; env hook for experiments.
-    # Locale is pinned to en-US (r12 ADVICE): Spark's non-ASCII lower()/
-    # upper() go through java.lang.String casing under the JVM DEFAULT
-    # locale, so e.g. a tr_TR JVM lowercases 'I' to dotless-i — which
-    # would silently break the bit-exact contract between the JVM
-    # winnow chain and its numpy/Arrow production twin
-    # (operators/text.py), and any other casing-sensitive operator.
-    # Python's str.lower() is locale-independent; pinning the JVM makes
-    # the engine's casing environment-independent too.
-    "spark.driver.extraJavaOptions": os.environ.get(
-        "SPARK_GRAFT_JVM_OPTS",
-        "-XX:+UseG1GC -Duser.language=en -Duser.country=US"),
+    # Keep the JVM-default G1; env hook for experiments. The locale
+    # flags ride on every JVM, executors included (see _jvm_opts).
+    "spark.driver.extraJavaOptions": _jvm_opts(),
+    "spark.executor.extraJavaOptions": _LOCALE_OPTS,
     # AQE: coalesce small shuffle partitions, split skewed ones at runtime.
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -147,9 +157,3 @@ def current_role(spark: SparkSession) -> str:
     """Snowflake ``current_role()`` analog; defaults to ACCOUNTADMIN
     (the role the reference demo runs under)."""
     return spark.conf.get(CURRENT_ROLE_CONF, "ACCOUNTADMIN")
-
-
-def current_account_col(spark: SparkSession) -> Column:
-    """The session account as a literal column — resolved at plan-build
-    time, exactly like the secure-view factory needs (SURVEY §2.10 G1)."""
-    return F.lit(current_account(spark))

@@ -9,6 +9,9 @@ better failure messages — equality is the goal.
 
 from __future__ import annotations
 
+import re
+from decimal import ROUND_HALF_UP, Decimal
+
 import duckdb
 import numpy as np
 import pandas as pd
@@ -158,3 +161,52 @@ def negative_zero_sweep(frames: dict[str, pd.DataFrame]) -> list[str]:
                     "with `round(...) + 0`"
                 )
     return problems
+
+
+# ---------------------------------------------------------------------------
+# pure-Python replays of engine operators (test references)
+# ---------------------------------------------------------------------------
+
+def spark_round(x: float, s: int = 4) -> float:
+    """Reference for Spark F.round on DOUBLE: BigDecimal.valueOf goes
+    through Double.toString (shortest round-trip repr — identical to
+    Python repr), HALF_UP, no signed zero. Verified against REAL
+    PySpark F.round in test_spark_round_matches_reference."""
+    q = Decimal(1).scaleb(-s)
+    return float(Decimal(repr(float(x))).quantize(
+        q, rounding=ROUND_HALF_UP)) + 0.0
+
+
+def winnow_ref(text: str, k: int = 4, w: int = 3) -> list[int]:
+    """Replay of winnowing (Schleimer et al. SIGMOD'03 §3): normalize,
+    polynomial k-gram hashes, rightmost minimum of each w-window, sorted
+    distinct ``pos_1based * MOD + hash`` codes. Normalizes with Python's
+    unicode ``\\s``, so it matches the engine on ASCII whitespace only."""
+    mod, base = 1_000_000_007, 131
+    s = re.sub(r"\s+", " ", text.lower()).strip()
+    hs = []
+    for i in range(len(s) - k + 1):
+        h = 0
+        for ch in s[i:i + k]:
+            h = (h * base + ord(ch)) % mod
+        hs.append(h)
+    picks = set()
+    for j in range(max(len(hs) - w + 1, 1) if hs else 0):
+        win = hs[j:j + w]
+        mn = min(win)
+        right = len(win) - 1 - win[::-1].index(mn)
+        picks.add((j + right + 1) * mod + mn)
+    return sorted(picks)
+
+
+def repetition_ref(text: str | None) -> tuple[float, float, float]:
+    """Replay of repetition_metrics: split the lowercased text on
+    ``[^a-z0-9]+``, ``1 - distinct/total`` per n-gram order n = 1, 2, 3
+    (0.0 without n-grams), Spark-rounded to 4 places."""
+    toks = [t for t in re.split("[^a-z0-9]+", (text or "").lower()) if t]
+    out = []
+    for n in (1, 2, 3):
+        grams = [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
+        out.append(spark_round(1.0 - len(set(grams)) / len(grams))
+                   if grams else 0.0)
+    return tuple(out)

@@ -3,6 +3,8 @@ scalars, variant) — the pieces the driver gate doesn't see directly."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -440,86 +442,47 @@ class TestLaneCacheContract:
         assert caching.release_lane_caches() == 0
 
 
-class TestRotationSuggest:
-    """The rotation window cut policy as pure arithmetic
-    (scripts/rotation_ledger.py --suggest, r10): fix obligations front
-    the window, then never-graded, then freshness-due, then
-    alphabetical refresh picks from the oldest cohort; the due-next
-    cohort's leftovers become the _VERIFY_LAST obligation. The cut was
-    hand-derived every round before r10 — a transcription slip there
-    silently misses a lane's grading deadline, so the policy gets a
-    pin like any other contract."""
+def test_registry_import_order_independent():
+    """Importing plans.queries_ext before plans.queries registers the
+    same lanes in the same order as importing plans.queries first — the
+    registry is complete whichever module a caller names."""
+    import json
+    import os
+    import subprocess
+    import sys
 
-    @staticmethod
-    def _suggest(names, green, fail, cur, window):
-        import importlib.util
-        import io
-        import os
-        from contextlib import redirect_stdout
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = "snowflake_data_pipeline_demo_spark.plans"
 
-        spec = importlib.util.spec_from_file_location(
-            "rotation_ledger",
-            os.path.join(os.path.dirname(__file__), "..", "scripts",
-                         "rotation_ledger.py"),
-        )
-        mod = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(mod)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            mod.suggest(names, green, fail, cur, window=window)
-        out = buf.getvalue()
-        blocks: dict[str, list[str]] = {}
-        key = None
-        for line in out.splitlines():
-            if line.startswith("# "):
-                key = line[2:].split(" (")[0]
-                blocks[key] = []
-            elif line.strip().startswith('"') and key:
-                blocks[key].append(line.strip().strip('",'))
-        return blocks
+    def lanes(first: str) -> list[str]:
+        code = (f"import {pkg}.{first}\n"
+                f"from {pkg}.queries import QUERIES\n"
+                "import json; print(json.dumps(list(QUERIES)))")
+        out = subprocess.run([sys.executable, "-c", code], cwd=repo,
+                             capture_output=True, text=True, check=True)
+        return json.loads(out.stdout.strip().splitlines()[-1])
 
-    def test_policy_order_and_leftovers(self):
-        names = [f"l{i:02d}" for i in range(10)]
-        green = {"l00": 5, "l01": 5, "l02": 4, "l03": 4, "l04": 3,
-                 "l05": 3, "l06": 5, "l08": 2, "l09": 5}
-        # l07 never graded; l08 green r02 then FAILED r05; l04/l05 due
-        fail = {"l08": 5}
-        b = self._suggest(names, green, fail, cur=5, window=6)
-        assert b["fix obligations"] == ["l08"]
-        assert b["never graded"] == ["l07"]
-        assert b["freshness-due"] == ["l04", "l05"]
-        # 2 refresh slots left -> oldest cohort (r04) alphabetical
-        assert b["refresh picks"] == ["l02", "l03"]
-        # the r04 cohort is exhausted by the picks; leftovers list the
-        # r04-cohort lanes NOT refreshed (none here)
-        assert b["_VERIFY_LAST"] == []
+    via_ext = lanes("queries_ext")
+    assert via_ext == lanes("queries")
+    assert "x_repetition_metrics" in via_ext and "flagship_secure_report" in via_ext
 
-    def test_leftovers_name_the_next_due_cohort(self):
-        names = ["a", "b", "c", "d", "e"]
-        green = {"a": 3, "b": 4, "c": 4, "d": 4, "e": 5}
-        b = self._suggest(names, green, {}, cur=5, window=2)
-        assert b["freshness-due"] == ["a"]
-        assert b["refresh picks"] == ["b"]
-        # c, d (r04) hit the limit at r07 and MUST front that window
-        assert b["_VERIFY_LAST"] == ["c", "d"]
 
-    def test_slipped_lane_is_still_an_obligation(self):
-        # r10 review: a lane whose deadline already PASSED (green at
-        # cur-3 or older — an earlier cut missed it) must front the
-        # window as due, not hide in the refresh pool where the
-        # overflow guard can't see it
-        names = ["a", "b", "c"]
-        green = {"a": 2, "b": 3, "c": 4}  # cur=5: 'a' slipped, 'b' due
-        b = self._suggest(names, green, {}, cur=5, window=3)
-        assert b["freshness-due"] == ["a", "b"]
-        assert b["refresh picks"] == ["c"]
+_SCRIPTS = Path(__file__).resolve().parents[1] / "scripts"
 
-    def test_overflow_is_loud(self):
-        import pytest as _pytest
-        names = [f"l{i}" for i in range(5)]
-        green = {n: 3 for n in names}  # all due at once
-        with _pytest.raises(SystemExit, match="exceed"):
-            self._suggest(names, green, {}, cur=5, window=3)
+
+@pytest.mark.parametrize(
+    "script", sorted(p.name for p in _SCRIPTS.glob("*.py")))
+def test_script_imports(script, monkeypatch):
+    """Every scripts/*.py module imports (each runs only under its
+    __main__ guard), so a renamed or deleted engine symbol a scale
+    script uses fails here rather than at its next run. The scripts
+    directory leads sys.path, as under ``python scripts/<name>.py``."""
+    import importlib.util
+
+    monkeypatch.syspath_prepend(str(_SCRIPTS))
+    spec = importlib.util.spec_from_file_location(
+        f"_script_{script[:-3]}", _SCRIPTS / script)
+    spec.loader.exec_module(importlib.util.module_from_spec(spec))
 
 
 def test_env_extra_conf_parses_semicolon_pairs(monkeypatch):

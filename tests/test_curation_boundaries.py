@@ -6,10 +6,9 @@
 - decontaminate's left_semi -> left_anti rewrite flipped behavior for
   NULL-id rows (semi dropped them, anti keeps them) — pin the intended
   (documented) behavior on both branches;
-- the JVM default locale is pinned to en-US by session._DEFAULTS so
-  Spark's String-casing (lower/upper on non-ASCII) matches Python's
-  locale-independent str.lower() — the winnow Arrow twin's bit-exact
-  contract depends on it.
+- the JVM default locale is pinned to en-US by session._DEFAULTS, on
+  the driver and the executors, so Spark's String-casing (lower/upper
+  on non-ASCII) does not depend on the host locale.
 """
 from __future__ import annotations
 
@@ -110,14 +109,45 @@ def test_decontaminate_null_id_seam_pinned(spark, eval_docs):
     assert kept_spine.count() == 0  # spine drops everything incl. NULL id
 
 
-def test_jvm_default_locale_pinned_en_us(spark):
-    """session._DEFAULTS pins -Duser.language=en -Duser.country=US so
-    JVM String casing is environment-independent (the winnow Arrow
-    twin's bit-exact contract, r12 ADVICE). Skipped when the session
-    was built with a custom SPARK_GRAFT_JVM_OPTS."""
+def test_jvm_default_locale_pinned_en_us(spark, monkeypatch):
+    """session._DEFAULTS pins -Duser.language=en -Duser.country=US on
+    the driver and on spark.executor.extraJavaOptions, so JVM String
+    casing is environment-independent beyond local mode. A custom SPARK_GRAFT_JVM_OPTS keeps the pin unless it sets
+    its own -Duser.language; only then is the live check skipped."""
     import os
 
-    if "SPARK_GRAFT_JVM_OPTS" in os.environ:
-        pytest.skip("custom JVM opts override the locale pin")
+    from snowflake_data_pipeline_demo_spark import session
+
+    pin = "-Duser.language=en -Duser.country=US"
+    user_opts = os.environ.get("SPARK_GRAFT_JVM_OPTS", "")
+    assert pin in spark.sparkContext.getConf().get(
+        "spark.executor.extraJavaOptions", "")
+
+    monkeypatch.setenv("SPARK_GRAFT_JVM_OPTS", "-XX:+UseParallelGC")
+    assert session._jvm_opts() == f"-XX:+UseParallelGC {pin}"
+    monkeypatch.setenv("SPARK_GRAFT_JVM_OPTS", "-Duser.language=tr")
+    assert session._jvm_opts() == "-Duser.language=tr"
+    monkeypatch.delenv("SPARK_GRAFT_JVM_OPTS")
+    assert session._jvm_opts() == f"-XX:+UseG1GC {pin}"
+
+    if "-Duser.language" in user_opts:
+        pytest.skip("custom JVM opts set their own locale")
     loc = spark.sparkContext._jvm.java.util.Locale.getDefault().toString()
     assert loc == "en_US"
+
+
+def test_stream_minhash_dedup_lane_skips_null_doc_id(spark, tmp_path):
+    """x_stream_minhash_dedup over a corpus holding a NULL doc_id: the
+    NULL row belongs to no doc_id-mod-3 micro-batch, so it is left out
+    of every n_in and the other rows keep their counts."""
+    from snowflake_data_pipeline_demo_spark.plans.queries import QUERIES
+
+    rows = [(i, " ".join(f"w{i}x{j}" for j in range(20))) for i in range(6)]
+    rows.append((None, " ".join(f"orphan{j}" for j in range(20))))
+    spark.createDataFrame(rows, "doc_id long, text string") \
+        .write.parquet(str(tmp_path / "documents.parquet"))
+    out = QUERIES["x_stream_minhash_dedup"].builder(spark, str(tmp_path))
+    got = [tuple(r) for r in out.orderBy("batch_id").collect()]
+    # (batch_id, n_in, n_kept, n_dropped, index_size): batch 1 re-ingests
+    # batch 0's two docs under fresh ids, and both are dropped
+    assert got == [(0, 2, 2, 0, 2), (1, 4, 2, 2, 4), (2, 2, 2, 0, 6)]

@@ -70,11 +70,9 @@ _COLUMN_FNS = {
     "quality_score": T.quality_score,
     "gopher_flags": T.gopher_flags,
     "content_fingerprint": T.content_fingerprint,
-    "repetition_metrics": T.repetition_metrics,
     # encoding_quality returns a LIST of named columns
     "encoding_quality": lambda c: F.struct(*T.encoding_quality(c)),
     "rolling_hash": T.rolling_hash,
-    "winnow_codes": T.winnow_codes,
     "shingles": dedup.shingles,
     "simhash16": dedup.simhash16,
 }
@@ -100,7 +98,7 @@ def _eval_docs(spark):
 _FRAME_CASES = {
     # text.py
     "tfidf_topk": lambda s, d: T.tfidf_topk(d, k=3),
-    "repetition_metrics_agg": lambda s, d: T.repetition_metrics_agg(d),
+    "repetition_metrics": lambda s, d: T.repetition_metrics(d),
     "unigram_logprob": lambda s, d: T.unigram_logprob(d),
     "bigram_logprob": lambda s, d: T.bigram_logprob(d),
     "dsir_importance": lambda s, d: T.dsir_importance(d, d.limit(3)),
@@ -133,12 +131,8 @@ _FRAME_CASES = {
     "paragraph_dedup": lambda s, d: dedup.paragraph_dedup(d),
     "line_dedup_within_doc": lambda s, d: dedup.line_dedup_within_doc(d),
     "winnow_fingerprints": lambda s, d: T.winnow_fingerprints(d),
-    "winnow_fingerprints_arrow": lambda s, d: T.winnow_fingerprints_arrow(d),
     "winnow_overlap_pairs": lambda s, d: T.winnow_overlap_pairs(
         d, min_shared=1
-    ),
-    "winnow_overlap_pairs_arrow": lambda s, d: T.winnow_overlap_pairs(
-        d, min_shared=1, engine="arrow"
     ),
     # chunking / packing
     "chunk_by_tokens": lambda s, d: chunking.chunk_by_tokens(d),

@@ -6,6 +6,7 @@ multimodal batch shapes."""
 from __future__ import annotations
 
 import pytest
+from oracle_utils import repetition_ref, spark_round, winnow_ref
 from pyspark.sql import functions as F
 
 from snowflake_data_pipeline_demo_spark.operators import (
@@ -506,30 +507,26 @@ def test_bigstar_isolated_and_multi_component(spark):
 
 
 # ---------------------------------------------------------------------------
-# repetition metrics production twin (round 4)
+# repetition metrics (round 4)
 # ---------------------------------------------------------------------------
 
-def test_repetition_agg_matches_array_form(spark, docs):
-    """The codegen (posexplode+lead+groupBy) twin must reproduce the
-    per-row array form exactly, including empty/null/short-doc edges."""
+def test_repetition_metrics_matches_python_replay(spark, docs):
+    """The posexplode+lead+groupBy repetition_metrics equals the
+    pure-Python replay over the corpus plus empty/null/short-doc edges
+    (one output row per input doc, 0.0 where no n-grams exist)."""
     edge = spark.createDataFrame(
         [(9001, None), (9002, ""), (9003, "..!!.."), (9004, "one"),
          (9005, "a b"), (9006, "x x x x x")],
         "doc_id long, text string",
     )
     df = docs.select("doc_id", "text").unionByName(edge)
-    array_form = df.select(
-        "doc_id", text.repetition_metrics("text").alias("r")
-    ).select("doc_id", "r.dup_unigram_frac", "r.dup_bigram_frac",
-             "r.dup_trigram_frac")
-    agg_form = text.repetition_metrics_agg(df)
-    a = {r["doc_id"]: (r["dup_unigram_frac"], r["dup_bigram_frac"],
-                       r["dup_trigram_frac"]) for r in array_form.collect()}
-    b = {r["doc_id"]: (r["dup_unigram_frac"], r["dup_bigram_frac"],
-                       r["dup_trigram_frac"]) for r in agg_form.collect()}
-    assert a == b
+    want = {r["doc_id"]: repetition_ref(r["text"]) for r in df.collect()}
+    got = {r["doc_id"]: (r["dup_unigram_frac"], r["dup_bigram_frac"],
+                         r["dup_trigram_frac"])
+           for r in text.repetition_metrics(df).collect()}
+    assert got == want
     # sanity on the planted degenerate doc: all-repeat unigrams
-    assert b[9006][0] == 0.8
+    assert got[9006][0] == 0.8
 
 
 def test_lazy_plan_construction(spark, docs):
@@ -1793,32 +1790,8 @@ def test_embedding_dim_stats_semantics(spark):
     assert out[1]["std"] == 0.0  # dead dimension
 
 
-def _winnow_ref(s, k=4, w=3):
-    """Driver-side replay of winnowing (Schleimer et al. §3): k-gram
-    polynomial hashes, rightmost-min per w-window, pos*MOD+hash codes."""
-    import re
-    MOD, B = 1_000_000_007, 131
-    s = re.sub(r"\s+", " ", s.lower()).strip()
-    n = len(s)
-    if n < k:
-        return []
-    hs = []
-    for i in range(n - k + 1):
-        h = 0
-        for ch in s[i:i + k]:
-            h = (h * B + ord(ch)) % MOD
-        hs.append(h)
-    picks = set()
-    for j in range(max(len(hs) - w + 1, 1)):
-        win = hs[j:j + w]
-        mn = min(win)
-        right = len(win) - 1 - win[::-1].index(mn)
-        picks.add((j + right + 1) * MOD + mn)
-    return sorted(picks)
-
-
 def test_winnow_fingerprints_match_reference_replay(spark):
-    """Spark winnow_codes == the independent Python replay over mixed
+    """winnow_fingerprints == the independent Python replay over mixed
     docs (incl. shared-substring pair, short/empty/ties), and the two
     winnowing guarantees hold: (1) every w-window of k-gram hashes
     contains a selected position — so any shared substring of length
@@ -1845,7 +1818,7 @@ def test_winnow_fingerprints_match_reference_replay(spark):
            T.winnow_fingerprints(df).collect()}
     MOD = 1_000_000_007
     for did, txt in rows:
-        ref = _winnow_ref(txt)
+        ref = winnow_ref(txt)
         got = ([] if out[did]["fps"] == "" else
                [int(p) * MOD + int(h) for p, h in
                 (c.split(":") for c in out[did]["fps"].split(","))])
@@ -1857,100 +1830,186 @@ def test_winnow_fingerprints_match_reference_replay(spark):
         for j in range(1, max(m - 3 + 1, 1) + 1 if m >= 1 else 1):
             assert sel_pos & set(range(j, min(j + 3, m + 1))), (did, j)
     # guarantee (2): the shared >= w+k-1 substring forces a common hash
-    h1 = {c % MOD for c in _winnow_ref(rows[0][1])}
-    h2 = {c % MOD for c in _winnow_ref(rows[1][1])}
+    h1 = {c % MOD for c in winnow_ref(rows[0][1])}
+    h2 = {c % MOD for c in winnow_ref(rows[1][1])}
     assert h1 & h2
     sh1 = {c.split(":")[1] for c in out[1]["fps"].split(",")}
     sh2 = {c.split(":")[1] for c in out[2]["fps"].split(",")}
     assert sh1 & sh2
 
 
-def test_winnow_fingerprints_arrow_twin_bit_exact(spark, docs):
-    """The Arrow/numpy PRODUCTION twin is BIT-IDENTICAL to the JVM
-    higher-order-function form — full rows (n_chars, n_kgrams, n_fps,
-    fps), not just hashes — over (a) the sf0.001 documents corpus and
-    (b) an adversarial frame targeting every seam where a naive Python
-    port diverges from the JVM semantics:
+#: adversarial frame for the winnow normalization seams: Java ``\s`` is
+#: ASCII-only, so NBSP / ideographic space / \x1c are CONTENT characters
+#: (Python's unicode ``\s`` and ``str.strip()`` would drop them);
+#: astral-plane codepoints count as one char; unicode case-mapping edges
+#: (U+0130 -> 'i' + combining dot grows the char count, final sigma, ß,
+#: titlecase dž); rightmost-min ties, periodic hashes, n < k,
+#: n < w+k-1 (a single short window), empty and NULL text.
+_WINNOW_ADVERSARIAL = [
+    (1, "left context the winnowing guarantee holds right context"),
+    (2, "aaaaaaaaaaaa"),                    # all-tie hashes
+    (3, "abc"),                             # n < k
+    (4, ""),
+    (5, "abcd"),                            # exactly one k-gram
+    (6, "xy zy xy zy xy zy"),               # periodic, repeated hashes
+    (7, "日本語 テキスト 𝄞 music"),          # astral plane
+    (8, "a\u00a0b\u00a0cd\u00a0ef"),   # NBSP is content, not ws
+    (9, "\u00a0 abcdef \u00a0"),        # NBSP at the trim edges
+    (10, "\u3000日本\u3000語のテキスト\u3000"),  # ideographic space
+    (11, "ab\x1ccd \x1c ef\x1cgh"),         # \x1c: python-\s-only ws
+    (12, "İstanbul ΑΣ Straße ǅungla"),      # case-mapping edges
+    (13, "tab\tand\nnewline\x0bvt\x0cff\rcr collapse"),
+    (14, None),
+    (15, "abcde"),                          # m=2 < w: one short window
+]
 
-    - Java ``\\s`` is ASCII-only: NBSP/ideographic-space/file-separator
-      (\\u00a0, \\u3000, \\x1c) are CONTENT characters to Spark's
-      regexp_replace but whitespace to Python's unicode ``\\s`` (and to
-      ``str.strip()``) — the twin must keep them;
-    - astral-plane codepoints (one split() element, ord == codepoint);
-    - unicode case-mapping edges (U+0130 -> 'i'+combining dot expands
-      the char count, final sigma, ß, titlecase dž);
-    - rightmost-min ties, periodic hashes, n < k, n < w+k-1 (single
-      short window), empty and NULL text.
+#: (doc_id, n_chars, n_kgrams, n_fps, fps) for _WINNOW_ADVERSARIAL, per
+#: (k, w) — recorded from the JVM higher-order-function winnow chain
+#: (normalize -> split -> aggregate/slice HOFs under an en-US JVM)
+#: before it was retired in favor of the numpy kernel. The DuckDB
+#: oracle cannot stand in here: its regexp/trim/lower differ from Spark's
+#: on the NBSP-edge, ideographic-space, casing and control-whitespace rows.
+_WINNOW_PINNED = {
+    (4, 3): [
+        (1, 56, 53, 26,
+         '2:228822841,5:73652502,6:224480406,8:249294037,10:229131739,'
+         '13:73943313,16:227622037,17:73994936,19:237951786,'
+         '20:249192380,21:249210575,24:237950790,26:232116135,'
+         '27:73721919,30:220033998,32:219967834,35:228794748,'
+         '36:227620078,37:73738305,38:235720583,41:226786921,'
+         '43:73909124,46:233353345,49:73652502,50:224480406,'
+         '52:249294037'),
+        (2, 12, 9, 7,
+         '3:219742248,4:219742248,5:219742248,6:219742248,7:219742248,'
+         '8:219742248,9:219742248'),
+        (3, 3, 0, 0, ''),
+        (4, 0, 0, 0, ''),
+        (5, 4, 1, 1, '1:219759674'),
+        (6, 17, 14, 4, '3:74048437,6:74014115,9:74048437,12:74014115'),
+        (7, 16, 13, 6,
+         '1:99358352,4:287856022,5:285153702,6:229146868,8:90307566,'
+         '11:73824903'),
+        (8, 9, 6, 3, '1:220823585,3:223071747,5:224298170'),
+        (9, 10, 7, 4, '2:73616466,3:219759674,4:222025058,5:224290442'),
+        (10, 11, 8, 4, '1:75658957,2:96354868,4:235153882,6:87749132'),
+        (11, 13, 10, 4, '3:64658619,6:72423713,7:63509033,8:73685563'),
+        (12, 26, 23, 10,
+         '1:249364511,3:260533958,5:219965492,7:222334935,10:88282111,'
+         '13:73927737,16:257976305,17:221904993,20:79745443,21:22655657'),
+        (13, 33, 30, 14,
+         '2:219750894,4:73618039,5:219965669,8:73839972,10:229113603,'
+         '13:237950528,15:227621917,16:73979138,19:73702728,22:73652817,'
+         '25:73652500,26:224480136,29:244473232,30:220002025'),
+        (14, None, 0, 0, ''),
+        (15, 5, 2, 1, '1:219759674'),
+    ],
+    (8, 4): [
+        (1, 56, 49, 19,
+         '4:130617898,5:131145403,7:195572670,9:601558122,13:758539116,'
+         '15:246804353,16:694308760,18:721550343,21:385179005,'
+         '25:91376201,26:161852052,28:415606654,31:74547383,34:15043958,'
+         '37:71949351,39:22666853,41:88643009,43:262612018,47:66928849'),
+        (2, 12, 5, 2, '4:443106138,5:443106138'),
+        (3, 3, 0, 0, ''),
+        (4, 0, 0, 0, ''),
+        (5, 4, 0, 0, ''),
+        (6, 17, 10, 4, '1:303376363,5:155980352,6:144152753,7:303376363'),
+        (7, 16, 9, 3, '3:56754837,4:235266803,8:113598215'),
+        (8, 9, 2, 1, '1:106507259'),
+        (9, 10, 3, 1, '1:277856994'),
+        (10, 11, 4, 1, '4:416232853'),
+        (11, 13, 6, 1, '3:117684426'),
+        (12, 26, 19, 8,
+         '4:44172011,6:78504475,7:475655965,11:401386162,12:90981142,'
+         '14:37609438,18:385951719,19:357129859'),
+        (13, 33, 26, 9,
+         '3:542423238,6:377956233,8:13031394,12:103505983,15:178828833,'
+         '18:42945551,20:54274951,23:154343805,26:75305607'),
+        (14, None, 0, 0, ''),
+        (15, 5, 0, 0, ''),
+    ],
+}
 
-    This pin is what lets the twin be benched as the production arm
-    (x_winnow_fingerprints_prod) without a rows-only caveat: unlike the
-    float LSH twin, integer arithmetic makes exactness provable.
-    """
+
+def test_winnow_fingerprints_pinned_rows(spark, docs):
+    """winnow_fingerprints reproduces the recorded JVM rows — full rows
+    (n_chars, n_kgrams, n_fps, fps), not just hashes — on the
+    adversarial frame at the lane's (k=4, w=3) and the overlap lane's
+    (k=8, w=4) parameterization, and equals the Python replay
+    (winnow_ref) row for row over the ASCII sf0.001 corpus."""
     from snowflake_data_pipeline_demo_spark.operators import text as T
 
-    rows = [
-        (1, "left context the winnowing guarantee holds right context"),
-        (2, "aaaaaaaaaaaa"),                    # all-tie hashes
-        (3, "abc"),                             # n < k
-        (4, ""),
-        (5, "abcd"),                            # exactly one k-gram
-        (6, "xy zy xy zy xy zy"),               # periodic, repeated hashes
-        (7, "日本語 テキスト 𝄞 music"),          # astral plane
-        (8, "a\u00a0b\u00a0cd\u00a0ef"),   # NBSP is content, not ws
-        (9, "\u00a0 abcdef \u00a0"),        # NBSP at the trim edges
-        (10, "\u3000日本\u3000語のテキスト\u3000"),  # ideographic space
-        (11, "ab\x1ccd \x1c ef\x1cgh"),         # \x1c: python-\s-only ws
-        (12, "İstanbul ΑΣ Straße ǅungla"),      # case-mapping edges
-        (13, "tab\tand\nnewline\x0bvt\x0cff\rcr collapse"),
-        (14, None),
-        (15, "abcde"),                          # m=2 < w: one short window
-    ]
-    adv = spark.createDataFrame(rows, "doc_id long, text string")
-    for frame in (adv, docs):
-        jvm = {r["doc_id"]: tuple(r)
-               for r in T.winnow_fingerprints(frame).collect()}
-        arrow = {r["doc_id"]: tuple(r)
-                 for r in T.winnow_fingerprints_arrow(frame).collect()}
-        assert arrow == jvm
-    # and at the overlap lane's (k=8, w=4) parameterization
-    jvm = {r["doc_id"]: tuple(r)
-           for r in T.winnow_fingerprints(adv, k=8, w=4).collect()}
-    arrow = {r["doc_id"]: tuple(r)
-             for r in T.winnow_fingerprints_arrow(adv, k=8, w=4).collect()}
-    assert arrow == jvm
+    adv = spark.createDataFrame(_WINNOW_ADVERSARIAL,
+                                "doc_id long, text string")
+    for (k, w), want in _WINNOW_PINNED.items():
+        got = sorted(tuple(r) for r in
+                     T.winnow_fingerprints(adv, k=k, w=w).collect())
+        assert got == want, (k, w)
+
+    MOD = 1_000_000_007
+    got = {r["doc_id"]: tuple(r)[1:]
+           for r in T.winnow_fingerprints(docs).collect()}
+    for r in docs.select("doc_id", "text").collect():
+        norm = " ".join(r["text"].lower().split())
+        ref = winnow_ref(r["text"])
+        fps = ",".join(f"{c // MOD}:{c % MOD}" for c in ref)
+        want = (len(norm), max(len(norm) - 3, 0), len(ref), fps)
+        assert got[r["doc_id"]] == want, r["doc_id"]
 
 
-def test_winnow_overlap_arrow_engine_matches_jvm(spark, docs):
-    """winnow_overlap_pairs(engine='arrow') returns EXACTLY the jvm
-    engine's rows — same pairs, same n_shared, same containment — on
+def _py_overlap_pairs(rows, k=8, w=4, min_shared=3, max_df=None):
+    """Python posting-join replay of winnow_overlap_pairs over
+    ``(doc_id, text)`` rows: distinct selected hash values per doc
+    (winnow_ref), postings filtered to hashes in <= max_df docs, pairs
+    id_a < id_b with >= min_shared shared hashes, containment = shared /
+    the smaller (pre-filter) hash-set size rounded HALF_UP to 4 places."""
+    from collections import Counter
+
+    MOD = 1_000_000_007
+    hv = {i: {c % MOD for c in winnow_ref(t, k, w)} if t is not None
+          else set() for i, t in rows}
+    df = Counter(h for hs in hv.values() for h in hs)
+    kept = {i: {h for h in hs if max_df is None or df[h] <= max_df}
+            for i, hs in hv.items()}
+    out = []
+    ids = sorted(hv)
+    for x, a in enumerate(ids):
+        for b in ids[x + 1:]:
+            n = len(kept[a] & kept[b])
+            if n and n >= min_shared:
+                out.append((a, b, n,
+                            spark_round(n / min(len(hv[a]), len(hv[b])))))
+    return out
+
+
+def test_winnow_overlap_matches_python_replay(spark, docs):
+    """winnow_overlap_pairs returns EXACTLY the Python posting-join
+    replay's rows — same pairs, same n_shared, same containment — on
     (a) the plagiarism-shaped fixture the graded lane uses, (b) the
     sf0.001 corpus (near-cartesian natural overlap — the stress case
     for the posting explode), and (c) with the max_df kill-switch on,
-    since the df-filter consumes the arrow arm's posting frame twice.
-    Unknown engines fail loudly."""
+    since the df-filter consumes the cached posting frame twice."""
     from snowflake_data_pipeline_demo_spark.operators import text as T
 
-    fixture = spark.createDataFrame(
+    fixture_rows = (
         [(i, " ".join(f"s{i}tok{j}" for j in range(30))) for i in range(20)]
         + [(100, "copied span one two three four five six seven eight"),
            (101, "copied span one two three four five six seven eight"),
-           (102, None), (103, ""), (104, "short")],
-        "doc_id long, text string",
+           (102, None), (103, ""), (104, "short")]
     )
+    fixture = spark.createDataFrame(fixture_rows, "doc_id long, text string")
+    doc_rows = [tuple(r) for r in docs.select("doc_id", "text").collect()]
     cases = [
-        (fixture, dict(min_shared=1)),
-        (fixture, dict(min_shared=3, max_df=8)),
-        (docs, dict(min_shared=3, max_df=16)),
+        (fixture, fixture_rows, dict(min_shared=1)),
+        (fixture, fixture_rows, dict(min_shared=3, max_df=8)),
+        (docs, doc_rows, dict(min_shared=3, max_df=16)),
     ]
-    for frame, kw in cases:
-        key = ["id_a", "id_b"]
-        jvm = T.winnow_overlap_pairs(frame, **kw).sort(*key).collect()
-        arrow = T.winnow_overlap_pairs(frame, engine="arrow", **kw) \
-                 .sort(*key).collect()
-        assert [tuple(r) for r in arrow] == [tuple(r) for r in jvm], kw
-        assert jvm, kw  # non-vacuous: every case must produce pairs
-    with pytest.raises(ValueError, match="unknown engine"):
-        T.winnow_overlap_pairs(fixture, engine="numpy")
+    for frame, rows, kw in cases:
+        got = [tuple(r) for r in T.winnow_overlap_pairs(frame, **kw)
+               .sort("id_a", "id_b").collect()]
+        want = _py_overlap_pairs(rows, **kw)
+        assert got == want, kw
+        assert want, kw  # non-vacuous: every case must produce pairs
 
 
 def test_winnow_overlap_planted_pairs(spark):

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 from conftest import SF_ORACLE
+from oracle_utils import spark_round
 
 
 def _registry():
@@ -213,18 +214,6 @@ def _midpoint_corpus():
     return cases
 
 
-def _bigdecimal_round(x: float, s: int = 4) -> float:
-    """Reference for Spark F.round on DOUBLE: BigDecimal.valueOf goes
-    through Double.toString (shortest round-trip repr — identical to
-    Python repr), HALF_UP, no signed zero. Verified against REAL
-    PySpark F.round in test_spark_round_matches_reference."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    q = Decimal(1).scaleb(-s)
-    return float(Decimal(repr(float(x))).quantize(
-        q, rounding=ROUND_HALF_UP)) + 0.0
-
-
 class TestRoundConformance:
     """Pins the r08 rounding-conformance discovery (plans/
     oracle_round.py): DuckDB round(double, s) rounds the scaled BINARY
@@ -249,7 +238,7 @@ class TestRoundConformance:
         d = con.execute(
             "SELECT round(x, 4) + 0 AS r FROM arr"
         ).fetchdf()["r"].to_numpy()
-        ref = np.array([_bigdecimal_round(x) for x in xs])
+        ref = np.array([spark_round(x) for x in xs])
         assert (d.view("int64") != ref.view("int64")).sum() >= 10, (
             f"DuckDB {duckdb.__version__} no longer diverges from "
             "BigDecimal string rounding on exact midpoints — the "
@@ -279,7 +268,7 @@ class TestRoundConformance:
         con.register("arr", pd.DataFrame({"x": xs}))
         sql = spark_round_oracle("SELECT round(x, 4) AS r FROM arr")
         d = con.execute(sql).fetchdf()["r"].to_numpy()
-        ref = np.array([_bigdecimal_round(x) for x in xs])
+        ref = np.array([spark_round(x) for x in xs])
         neq = d.view("int64") != ref.view("int64")
         assert not neq.any(), (
             f"{int(neq.sum())} divergences; first: "
@@ -288,7 +277,7 @@ class TestRoundConformance:
 
     def test_spark_round_matches_reference(self, spark):
         """The reference-validity pin: real PySpark F.round agrees
-        with _bigdecimal_round on the midpoint corpus + 5k randoms
+        with spark_round on the midpoint corpus + 5k randoms
         (r08 probe: 0 divergences over 40,384 cases)."""
         import numpy as np
         import pandas as pd
@@ -302,7 +291,7 @@ class TestRoundConformance:
         out = df.select(
             (F.round("x", 4) + F.lit(0.0)).alias("r")
         ).toPandas()["r"].to_numpy()
-        ref = np.array([_bigdecimal_round(x) for x in xs])
+        ref = np.array([spark_round(x) for x in xs])
         assert not (out.view("int64") != ref.view("int64")).any()
 
     def test_rewriter_mechanics(self):
@@ -468,7 +457,7 @@ class TestRoundConformance:
         for s in (0, 1, 3, 4, 6):
             sql = spark_round_oracle(f"SELECT round(x, {s}) AS r FROM arr")
             d = con.execute(sql).fetchdf()["r"].to_numpy()
-            ref = np.array([_bigdecimal_round(x, s) for x in xs])
+            ref = np.array([spark_round(x, s) for x in xs])
             neq = d.view("int64") != ref.view("int64")
             assert not neq.any(), (
                 f"s={s}: {int(neq.sum())} divergences; first: "

@@ -44,25 +44,12 @@ def test_pure_projection_operators_have_no_shuffle(spark):
         assert "Exchange" not in p, name
 
 
-def test_winnow_arrow_twin_is_shuffle_free_arrow_eval(spark):
-    """The winnow PRODUCTION twin must stay a shuffle-free projection
-    whose Python boundary is the vectorized ArrowEvalPython node —
-    never row-pickling BatchEvalPython (guide §4: Arrow-batched or
-    nothing), and never an Exchange (it composes into any scan for
-    free, like the JVM arm the pin above covers)."""
-    import contextlib
-    import io
-
-    from snowflake_data_pipeline_demo_spark.operators.text import (
-        winnow_fingerprints_arrow,
-    )
-    from snowflake_data_pipeline_demo_spark.sources.testdata import load
-
-    df = winnow_fingerprints_arrow(load(spark, SF, "documents"))
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    p = buf.getvalue()
+def test_winnow_fingerprints_is_shuffle_free_arrow_eval(spark):
+    """The winnow kernel's Python boundary must be the vectorized
+    ArrowEvalPython node — never row-pickling BatchEvalPython (guide
+    §4: Arrow-batched or nothing) — and never an Exchange (it composes
+    into any scan for free)."""
+    p = _plan(spark, "x_winnow_fingerprints")
     assert "ArrowEvalPython" in p
     assert "BatchEvalPython" not in p
     assert "Exchange" not in p
@@ -150,11 +137,11 @@ def test_dsir_scalar_totals_ride_a_broadcast(spark):
         "BroadcastHashJoin" in p
 
 
-def test_repetition_twin_single_doc_exchange(spark):
-    """The agg twin's window and groupBy share the doc key; the only
-    exchanges are the doc-key shuffle plus the Expand'd distinct-agg
-    re-shuffles — no nested loop anywhere."""
-    p = _plan(spark, "x_repetition_metrics_prod")
+def test_repetition_metrics_single_doc_exchange(spark):
+    """repetition_metrics' window and groupBy share the doc key; the
+    only exchanges are the doc-key shuffle plus the Expand'd
+    distinct-agg re-shuffles — no nested loop anywhere."""
+    p = _plan(spark, "x_repetition_metrics")
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
     assert "Window" in p and "Expand" in p

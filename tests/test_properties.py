@@ -206,23 +206,22 @@ def test_bigstar_components_match_union_find(spark, edges):
     ),
 )
 @_SLOW
-def test_repetition_agg_twin_matches_array_form(spark, texts):
-    """The shuffle-side repetition twin must equal the per-row array
-    form on arbitrary degenerate inputs (tiny alphabet forces heavy
-    n-gram repetition; '.'/' ' exercise tokenizer edges)."""
+def test_repetition_metrics_matches_python_replay(spark, texts):
+    """repetition_metrics equals the pure-Python replay
+    (oracle_utils.repetition_ref) on arbitrary degenerate inputs (tiny
+    alphabet forces heavy n-gram repetition; '.'/' ' exercise tokenizer
+    edges)."""
+    from oracle_utils import repetition_ref
+
     from snowflake_data_pipeline_demo_spark.operators import text as T
 
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
     cols = ["dup_unigram_frac", "dup_bigram_frac", "dup_trigram_frac"]
-    a = {r["doc_id"]: tuple(r[c] for c in cols)
-         for r in df.select(
-             "doc_id", T.repetition_metrics("text").alias("r")
-         ).select("doc_id", *[f"r.{c}" for c in cols]).collect()}
-    b = {r["doc_id"]: tuple(r[c] for c in cols)
-         for r in T.repetition_metrics_agg(df).collect()}
-    assert a == b
+    got = {r["doc_id"]: tuple(r[c] for c in cols)
+           for r in T.repetition_metrics(df).collect()}
+    assert got == {i: repetition_ref(t) for i, t in enumerate(texts)}
 
 
 @given(
@@ -589,33 +588,22 @@ def test_snapshot_diff_is_set_algebra(spark, old_ids, new_ids):
     assert r["n_kept"] == len(old_ids & new_ids)
 
 
-def _py_winnow(text: str, k: int, w: int) -> list[int]:
-    """Pure-Python replay of winnow_codes (Schleimer'03 rightmost-min):
-    normalize -> polynomial k-gram hashes -> rightmost minimum of each
-    w-window -> sorted distinct (pos_1based * MOD + hash) codes."""
-    import re
-
+def _fingerprint_codes(spark, texts, k, w):
+    """doc index -> winnow_fingerprints' selections parsed back out of
+    ``fps`` as sorted ``pos * MOD + hash`` codes."""
     from snowflake_data_pipeline_demo_spark.operators.text import (
-        ROLLING_BASE, ROLLING_MOD,
+        ROLLING_MOD, winnow_fingerprints,
     )
 
-    s = re.sub(r"\s+", " ", text.lower()).strip()
-    n = len(s)
-    hashes = []
-    for i in range(max(n - k + 1, 0)):
-        acc = 0
-        for ch in s[i:i + k]:
-            acc = (acc * ROLLING_BASE + ord(ch)) % ROLLING_MOD
-        hashes.append(acc)
-    if not hashes:
-        return []
-    codes = set()
-    for j in range(max(len(hashes) - w + 1, 1)):
-        win = hashes[j:j + w]
-        mn = min(win)
-        right = len(win) - 1 - win[::-1].index(mn)  # rightmost min
-        codes.add((j + right + 1) * ROLLING_MOD + mn)
-    return sorted(codes)
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
+    return {
+        r["doc_id"]: [] if not r["fps"] else [
+            int(p) * ROLLING_MOD + int(h)
+            for p, h in (c.split(":") for c in r["fps"].split(","))
+        ]
+        for r in winnow_fingerprints(df, k=k, w=w).collect()
+    }
 
 
 @given(st.lists(
@@ -623,24 +611,21 @@ def _py_winnow(text: str, k: int, w: int) -> list[int]:
     min_size=1, max_size=6,
 ))
 @_SLOW
-def test_winnow_codes_match_python_replay(spark, texts):
-    """winnow_codes equals a pure-Python Schleimer'03 replay for ANY
-    tiny-alphabet text (maximal hash ties stress the rightmost-min
+def test_winnow_fingerprints_match_python_replay(spark, texts):
+    """winnow_fingerprints equals a pure-Python Schleimer'03 replay for
+    ANY tiny-alphabet text (maximal hash ties stress the rightmost-min
     tie-break; whitespace stresses normalization), and the selection
     satisfies the winnowing COVERAGE guarantee: every w-window of
     k-gram positions contains at least one selected position — the
     property that makes any >= w+k-1 char match detectable."""
-    from snowflake_data_pipeline_demo_spark.operators.text import (
-        ROLLING_MOD, winnow_codes,
-    )
+    from oracle_utils import winnow_ref
+
+    from snowflake_data_pipeline_demo_spark.operators.text import ROLLING_MOD
 
     k, w = 4, 3
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
-    got = {r["doc_id"]: list(r["c"]) for r in df.select(
-        "doc_id", winnow_codes("text", k=k, w=w).alias("c")).collect()}
+    got = _fingerprint_codes(spark, texts, k, w)
     for i, t in enumerate(texts):
-        want = _py_winnow(t, k, w)
+        want = winnow_ref(t, k, w)
         assert got[i] == want, (t, got[i], want)
         # coverage guarantee over the replayed positions
         pos = {c // ROLLING_MOD for c in want}
@@ -664,17 +649,12 @@ def test_winnow_shared_substring_guarantees_shared_fingerprint(
     normalized stream) select at least one common fingerprint HASH —
     under arbitrary surrounding text and a tiny alphabet (worst case
     for ties). k=4, w=3 -> shared >= 6 chars suffices."""
-    from snowflake_data_pipeline_demo_spark.operators.text import (
-        ROLLING_MOD, winnow_codes,
-    )
+    from snowflake_data_pipeline_demo_spark.operators.text import ROLLING_MOD
 
-    k, w = 4, 3
     doc_a = prefix + shared
     doc_b = shared + suffix
-    df = spark.createDataFrame(
-        [(0, doc_a), (1, doc_b)], "doc_id long, text string")
-    got = {r["doc_id"]: {c % ROLLING_MOD for c in r["c"]} for r in df.select(
-        "doc_id", winnow_codes("text", k=k, w=w).alias("c")).collect()}
+    got = {i: {c % ROLLING_MOD for c in codes} for i, codes in
+           _fingerprint_codes(spark, [doc_a, doc_b], k=4, w=3).items()}
     assert got[0] & got[1], (doc_a, doc_b, got)
 
 
